@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Sinks — the L of the ETL jobs (SURVEY.md §2.2). */
 object Writers {
@@ -11,9 +13,68 @@ object Writers {
     * through one task because the downstream consumer reads exactly
     * one file — a deliberate bottleneck on final outputs only, never
     * on intermediate data (SURVEY.md §7.4 risk 6).
+    *
+    * The ETL jobs write their outputs through [[singleFileJsonAll]]:
+    * a job's independent outputs are written concurrently, at most
+    * `defaultParallelism` at a time. Each output is still exactly one
+    * JSON file with the same contents as a one-by-one pass.
     */
   def singleFileJson(df: DataFrame, dir: String): Unit =
     df.coalesce(1).write.mode("overwrite").json(dir)
+
+  /** Writes each `name -> build` output of `job` as
+    * `singleFileJson(build(), s"$outDir/$name")`, all of them
+    * concurrently through [[concurrently]]. A job is ~10 small
+    * single-task writes: one at a time they leave the driver waiting
+    * on fixed per-query cost while the cores idle.
+    */
+  def singleFileJsonAll(spark: SparkSession, job: String, outDir: String,
+    outputs: Seq[(String, () => DataFrame)]): Unit =
+    concurrently(spark, job, outputs.map { case (name, build) =>
+      name -> (() => singleFileJson(build(), s"$outDir/$name"))
+    })
+
+  /** Runs independent driver-side actions of `job` concurrently and
+    * returns their results in declared order. The pool is sized
+    * `min(actions, defaultParallelism)` and created per call, so its
+    * threads inherit the caller's Spark local properties (job tags,
+    * job group, description — what job-group cancellation and
+    * per-job attribution key on); a shared pool's threads would not.
+    * Each thread runs with `spark` as its active session.
+    *
+    * Every action is waited for. The first failure in declared order
+    * is rethrown naming `job` and the action, with the later failures
+    * attached as suppressed; the pool is shut down in every case.
+    */
+  def concurrently[A](spark: SparkSession, job: String,
+    actions: Seq[(String, () => A)]): Seq[A] = {
+    val size = math.max(1, math.min(actions.length, spark.sparkContext.defaultParallelism))
+    val ids = new AtomicInteger()
+    val threads: ThreadFactory = (r: Runnable) => {
+      val t = new Thread(r, s"$job-${ids.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+    val pool = Executors.newFixedThreadPool(size, threads)
+    try {
+      val futures = actions.map { case (_, action) =>
+        pool.submit(new Callable[A] {
+          def call(): A = { SparkSession.setActiveSession(spark); action() }
+        })
+      }
+      val outcomes = futures.map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      val failures = actions.zip(outcomes).collect { case ((name, _), Left(e)) =>
+        new RuntimeException(s"$job: $name failed: $e", e)
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.collect { case Right(a) => a }
+    } finally pool.shutdownNow()
+  }
 
   /** K2 — parquet materialization (cases_clinical_spectrum_analysis
     * .py:115-116).

@@ -198,23 +198,20 @@ object CasesTimeAnalysis {
   /** Full job: extract → transform → 14 named sinks (:15-83, :309-314). */
   def run(spark: SparkSession, inputCsv: String, outDir: String): Unit = {
     val df = transform(extract(spark, inputCsv))
-    val outputs: Seq[(String, DataFrame)] = Seq(
-      "confirmed_cases_and_deaths_globally" -> confirmedCasesAndDeathsGlobally(df),
-      "confirmed_cases_serbia" -> confirmedCasesByCountry(df, "Serbia"),
-      "confirmed_cases_norway" -> confirmedCasesByCountry(df, "Norway"),
-      "confirmed_cases_italy" -> confirmedCasesByCountry(df, "Italy"),
-      "confirmed_cases_china" -> confirmedCasesByCountry(df, "China"),
-      "confirmed_cases_europe" -> confirmedCasesEurope(df),
-      "confirmed_cases_comparison" -> confirmedCasesComparison(df),
-      "confirmed_cases_mortality_rates" -> mortalityRates(df),
-      "confirmed_cases_recovery_rates" -> recoveryRates(df),
-      "time_series" -> timeSeries(df),
-      "time_series_by_countries" -> timeSeriesByCountries(df),
-      "time_series_test_data" -> timeSeriesTestData(df),
-      "future_predictions" -> futurePredictions(df),
-      "future_forecasting" -> futureForecasting(df))
-    outputs.foreach { case (name, out) =>
-      Writers.singleFileJson(out, s"$outDir/$name")
-    }
+    Writers.singleFileJsonAll(spark, "cases_time", outDir, Seq(
+      "confirmed_cases_and_deaths_globally" -> (() => confirmedCasesAndDeathsGlobally(df)),
+      "confirmed_cases_serbia" -> (() => confirmedCasesByCountry(df, "Serbia")),
+      "confirmed_cases_norway" -> (() => confirmedCasesByCountry(df, "Norway")),
+      "confirmed_cases_italy" -> (() => confirmedCasesByCountry(df, "Italy")),
+      "confirmed_cases_china" -> (() => confirmedCasesByCountry(df, "China")),
+      "confirmed_cases_europe" -> (() => confirmedCasesEurope(df)),
+      "confirmed_cases_comparison" -> (() => confirmedCasesComparison(df)),
+      "confirmed_cases_mortality_rates" -> (() => mortalityRates(df)),
+      "confirmed_cases_recovery_rates" -> (() => recoveryRates(df)),
+      "time_series" -> (() => timeSeries(df)),
+      "time_series_by_countries" -> (() => timeSeriesByCountries(df)),
+      "time_series_test_data" -> (() => timeSeriesTestData(df)),
+      "future_predictions" -> (() => futurePredictions(df)),
+      "future_forecasting" -> (() => futureForecasting(df))))
   }
 }

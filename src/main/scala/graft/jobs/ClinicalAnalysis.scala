@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.spark.ml.{Estimator, Transformer}
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
@@ -113,7 +114,8 @@ object ClinicalAnalysis {
 
   /** M1-M6 — the four-classifier accuracy comparison (:160-216):
     * assemble 9 features, seeded 80/20 split (seed=2020, :173), fit
-    * RF/DT/LR/GBT, evaluate accuracy. Returns 4 rows (value).
+    * RF/DT/LR/GBT concurrently, evaluate accuracy. Returns 4 rows
+    * (value), in RF, DT, LR, GBT order.
     */
   def predictions(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -130,16 +132,20 @@ object ClinicalAnalysis {
       .transform(numeric)
       .select("features", "label")
       .cache()
-    val Array(train, test) = assembled.randomSplit(Array(0.8, 0.2), seed = 2020)
-    val evaluator = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy")
-    val models = Seq(
-      new RandomForestClassifier().setMaxDepth(5).fit(train),
-      new DecisionTreeClassifier().setMaxDepth(3).fit(train),
-      new LogisticRegression().setMaxIter(10).fit(train),
-      new GBTClassifier().fit(train))
-    val accs = models.map(m => evaluator.evaluate(m.transform(test)))
-    accs.toDF("value")
+    try {
+      val Array(train, test) = assembled.randomSplit(Array(0.8, 0.2), seed = 2020)
+      val evaluator = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy")
+      val classifiers: Seq[Estimator[_ <: Transformer]] = Seq(
+        new RandomForestClassifier().setMaxDepth(5),
+        new DecisionTreeClassifier().setMaxDepth(3),
+        new LogisticRegression().setMaxIter(10),
+        new GBTClassifier())
+      val accs = Writers.concurrently(spark, "clinical-predictions", classifiers.map { c =>
+        c.getClass.getSimpleName -> (() => evaluator.evaluate(c.fit(train).transform(test)))
+      })
+      accs.toDF("value")
+    } finally assembled.unpersist()
   }
 
   /** Config-file bootstrap — the reference's one-JSON-per-job submit
@@ -152,17 +158,15 @@ object ClinicalAnalysis {
 
   def run(spark: SparkSession, inputCsv: String, outDir: String): Unit = {
     val df = transform(extract(spark, inputCsv))
-    Writers.singleFileJson(hemoglobinValues(df), s"$outDir/hemoglobin_values")
-    Writers.singleFileJson(redBloodCellsValues(df), s"$outDir/red_blood_cells_values")
-    Writers.singleFileJson(aggregateAgeResult(df), s"$outDir/aggregate_age_result")
-    Writers.singleFileJson(ageRelations(df), s"$outDir/age_relations")
-    Writers.singleFileJson(careRelations(df, s"$outDir/temporary.parquet"),
-      s"$outDir/care_relations")
-    Writers.singleFileJson(missingValues(df), s"$outDir/predictions_missing_values")
-    Writers.singleFileJson(valueDistribution(df),
-      s"$outDir/predictions_value_distribution")
-    Writers.singleFileJson(testResultDistribution(df),
-      s"$outDir/predictions_test_result_distribution")
-    Writers.singleFileJson(predictions(df), s"$outDir/predictions")
+    Writers.singleFileJsonAll(spark, "clinical", outDir, Seq(
+      "hemoglobin_values" -> (() => hemoglobinValues(df)),
+      "red_blood_cells_values" -> (() => redBloodCellsValues(df)),
+      "aggregate_age_result" -> (() => aggregateAgeResult(df)),
+      "age_relations" -> (() => ageRelations(df)),
+      "care_relations" -> (() => careRelations(df, s"$outDir/temporary.parquet")),
+      "predictions_missing_values" -> (() => missingValues(df)),
+      "predictions_value_distribution" -> (() => valueDistribution(df)),
+      "predictions_test_result_distribution" -> (() => testResultDistribution(df)),
+      "predictions" -> (() => predictions(df))))
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.functions.BinKernels
 import graft.io.{Readers, Writers}
 import graft.operators.BatchInference
@@ -66,16 +67,18 @@ object RadiographyAnalysis {
 
   /** D6+D8+A6+F5 — representative sample per class: strip the
     * file:// prefix unless hdfs://, classify the label, drop invalid
-    * (py:114-123, 357-378).
+    * (py:114-123, 357-378). The representative is the class's
+    * smallest origin, so the pick does not depend on which rows a
+    * shuffle returns first (the reference's dropDuplicates does).
     */
   def takeSamples(df: DataFrame): DataFrame = {
-    val origin = col("image.origin")
+    val origin = col("origin")
     val hdfsOrigin = when(origin.startsWith("hdfs://"), origin)
-      .otherwise(expr("substring(image.origin, 8)"))
+      .otherwise(expr("substring(origin, 8)"))
     val classify = classNames.zipWithIndex.foldLeft(lit(ClassnameInvalid)) {
       case (acc, (name, k)) => when(col("label") === k, name).otherwise(acc)
     }
-    df.dropDuplicates(Seq("label"))
+    df.groupBy("label").agg(min("image.origin").as("origin"))
       .withColumn("origin", hdfsOrigin)
       .withColumn("class_name", classify)
       .filter(col("class_name") =!= ClassnameInvalid)
@@ -85,10 +88,12 @@ object RadiographyAnalysis {
 
   /** D4 fused + O4 — per-class bounded sample, single-pass byte
     * stats over image bytes (py:126-162; fused per SURVEY.md §4.3).
+    * The sample is the first `samplePerClass` images by origin, so its
+    * membership and order do not depend on partition arrival order.
     */
   def colourDistribution(df: DataFrame, samplePerClass: Int = 1000): DataFrame = {
     val sampled = classNames.indices
-      .map(k => df.filter(col("label") === k).limit(samplePerClass))
+      .map(k => df.filter(col("label") === k).orderBy(col("image.origin")).limit(samplePerClass))
       .reduce(_ union _)
     sampled
       .withColumn("s", BinKernels.byteStatsCol(col("image.data")))
@@ -118,27 +123,31 @@ object RadiographyAnalysis {
       .setOutputCol("features")
       .transform(feats)
       .cache()
-    // reference split is unseeded (py:192); pinned for determinism
-    val Array(train, test) = assembled.randomSplit(Array(0.9, 0.1), seed = 2020)
-    val model = new RandomForestClassifier().setMaxDepth(10).fit(train)
-    val scored = model.transform(test).cache()
-    val accuracy = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(scored)
-    val metrics = new MulticlassMetrics(
-      scored.select("prediction", "label").rdd
-        .map(r => (r.getDouble(0), r.getDouble(1))))
-    val matrix = metrics.confusionMatrix.rowIter
-      .map(_.toArray.toSeq).toSeq
-    Seq((accuracy, matrix)).toDF("accuracy", "matrix")
+    try {
+      // reference split is unseeded (py:192); pinned for determinism
+      val Array(train, test) = assembled.randomSplit(Array(0.9, 0.1), seed = 2020)
+      val model = new RandomForestClassifier().setMaxDepth(10).fit(train)
+      val scored = model.transform(test).cache()
+      try {
+        val accuracy = new MulticlassClassificationEvaluator()
+          .setMetricName("accuracy").evaluate(scored)
+        val metrics = new MulticlassMetrics(
+          scored.select("prediction", "label").rdd
+            .map(r => (r.getDouble(0), r.getDouble(1))))
+        val matrix = metrics.confusionMatrix.rowIter
+          .map(_.toArray.toSeq).toSeq
+        Seq((accuracy, matrix)).toDF("accuracy", "matrix")
+      } finally scored.unpersist()
+    } finally assembled.unpersist()
   }
 
   /** D12 — bounded inference sample through the load-once-per-
     * partition batched scorer (py:293-326; stub model, SURVEY.md
-    * §7.3).
+    * §7.3). The sample is the first `sample` images by origin.
     */
   def dlInference(df: DataFrame, sample: Int = 100, batchSize: Int = 64): DataFrame =
     BatchInference.inferBinary(
-      df.limit(sample).select(col("image.data").as("data")).cache(),
+      df.orderBy(col("image.origin")).limit(sample).select(col("image.data").as("data")),
       "data", batchSize)(BatchInference.stubModel _)
       .select("prediction")
 
@@ -196,11 +205,19 @@ object RadiographyAnalysis {
   }
 
   def run(spark: SparkSession, baseDir: String, outDir: String): Unit = {
-    val df = transform(extract(spark, baseDir)).cache()
-    Writers.singleFileJson(percentageOfSamples(df), s"$outDir/percentage_of_samples")
-    Writers.singleFileJson(takeSamples(df), s"$outDir/take_samples")
-    Writers.singleFileJson(colourDistribution(df), s"$outDir/colour_distribution")
-    Writers.singleFileJson(mlClassification(df), s"$outDir/ml_classification")
-    Writers.singleFileJson(dlInference(df), s"$outDir/dl_inference")
+    val input = transform(extract(spark, baseDir))
+    // a frame the caller already cached stays cached after the run
+    val ownCache = input.storageLevel == StorageLevel.NONE
+    val df = input.cache()
+    try {
+      // the first output fills the cache alone: four concurrent first
+      // readers would each repeat the image decode and the shuffle
+      Writers.singleFileJson(percentageOfSamples(df), s"$outDir/percentage_of_samples")
+      Writers.singleFileJsonAll(spark, "radiography", outDir, Seq(
+        "take_samples" -> (() => takeSamples(df)),
+        "colour_distribution" -> (() => colourDistribution(df)),
+        "ml_classification" -> (() => mlClassification(df)),
+        "dl_inference" -> (() => dlInference(df))))
+    } finally if (ownCache) df.unpersist()
   }
 }

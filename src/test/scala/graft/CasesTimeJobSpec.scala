@@ -84,13 +84,24 @@ class CasesTimeJobSpec extends SparkTestBase {
   }
 
   test("run writes single-file JSON outputs") {
-    val out = java.nio.file.Files.createTempDirectory("cases_time_out").toString
-    CasesTimeAnalysis.run(spark, fixture, out)
-    val dir = new java.io.File(s"$out/confirmed_cases_and_deaths_globally")
-    val parts = dir.listFiles().filter(_.getName.endsWith(".json"))
-    assert(parts.length == 1, "coalesce(1) must produce exactly one json file")
-    assert(new java.io.File(s"$out/future_predictions").exists())
-    assert(new java.io.File(s"$out/future_forecasting").exists())
-    assert(new java.io.File(s"$out/time_series_test_data").exists())
+    // 3 days; Italy and China report 2; 6 European and 7 countries in
+    // all; the 4 forecast countries hold 9 (date, country) rows, one
+    // day falls in the md5 test split, and each forecasts 30 days
+    // (90 more after its own history for future_forecasting)
+    checkJobRun("cases_time", Map(
+      "confirmed_cases_and_deaths_globally" -> 3L,
+      "confirmed_cases_serbia" -> 3L,
+      "confirmed_cases_norway" -> 3L,
+      "confirmed_cases_italy" -> 2L,
+      "confirmed_cases_china" -> 2L,
+      "confirmed_cases_europe" -> 6L,
+      "confirmed_cases_comparison" -> 3L,
+      "confirmed_cases_mortality_rates" -> 7L,
+      "confirmed_cases_recovery_rates" -> 7L,
+      "time_series" -> 3L,
+      "time_series_by_countries" -> 9L,
+      "time_series_test_data" -> 1L,
+      "future_predictions" -> 120L,
+      "future_forecasting" -> 369L))(CasesTimeAnalysis.run(spark, fixture, _))
   }
 }

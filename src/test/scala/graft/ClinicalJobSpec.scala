@@ -65,4 +65,18 @@ class ClinicalJobSpec extends SparkTestBase {
     assert(c.count() == 6) // positive rows
     assert(!c.columns.contains(admissionCols.head))
   }
+
+  test("run writes single-file JSON outputs") {
+    // 12 patients, 6 of them positive; profiles are one row each
+    checkJobRun("clinical", Map(
+      "hemoglobin_values" -> 12L,
+      "red_blood_cells_values" -> 12L,
+      "aggregate_age_result" -> 2L,
+      "age_relations" -> 12L,
+      "care_relations" -> 6L,
+      "predictions_missing_values" -> 1L,
+      "predictions_value_distribution" -> 12L,
+      "predictions_test_result_distribution" -> 1L,
+      "predictions" -> 4L))(ClinicalAnalysis.run(spark, fixture, _))
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.{Readers, Writers}
 import graft.sources.Tables
@@ -83,5 +84,44 @@ class IoRoundTripSpec extends SparkTestBase {
       .where(col("quality").isNull).count() == 0)
     // a plain (non-merging) read may resolve either footer — that is
     // exactly the hazard the explicit reader exists to close
+  }
+
+  test("singleFileJsonAll: a failing output is named, the others are written, no pool thread survives") {
+    val out = java.nio.file.Files.createTempDirectory("fanout").toString
+    val job = "fanout-failure"
+    val used = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    def onPool(df: => org.apache.spark.sql.DataFrame): () => org.apache.spark.sql.DataFrame =
+      () => { used.add(Thread.currentThread()); df }
+    val e = intercept[RuntimeException] {
+      Writers.singleFileJsonAll(spark, job, out, Seq(
+        "first" -> onPool(spark.range(3).toDF()),
+        "broken" -> onPool(throw new IllegalStateException("no input")),
+        "second" -> onPool(spark.range(5).toDF()),
+        "broken_later" -> onPool(spark.range(1).selectExpr("raise_error('bad row')"))))
+    }
+    assert(e.getMessage.startsWith(s"$job: broken failed"), e.getMessage)
+    assert(e.getCause.isInstanceOf[IllegalStateException])
+    assert(e.getSuppressed.map(_.getMessage).toSeq.exists(_.startsWith(s"$job: broken_later failed")))
+    Seq("first" -> 3L, "second" -> 5L).foreach { case (name, lines) =>
+      val parts = new java.io.File(out, name).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+      assert(parts.length == 1 && java.nio.file.Files.lines(parts.head.toPath).count() == lines)
+    }
+    // every output ran on a pool thread; an idle pool thread that was
+    // never shut down would outlive any join
+    val threads = used.toArray(Array.empty[Thread]).distinct
+    assert(threads.length == 4 && !threads.contains(Thread.currentThread()))
+    threads.foreach(_.join(10000))
+    assert(threads.forall(!_.isAlive), threads.filter(_.isAlive).map(_.getName).mkString(", "))
+  }
+
+  test("concurrently: results in declared order, on the given session") {
+    val sibling = spark.newSession()
+    SparkSession.setActiveSession(spark)
+    val got = Writers.concurrently(sibling, "fanout-order", Seq(
+      "slow" -> (() => { Thread.sleep(300); 1 -> SparkSession.active }),
+      "fast" -> (() => 2 -> SparkSession.active)))
+    assert(got.map(_._1) == Seq(1, 2))
+    assert(got.forall(_._2 eq sibling))
   }
 }

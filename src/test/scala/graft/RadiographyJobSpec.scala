@@ -51,6 +51,10 @@ class RadiographyJobSpec extends SparkTestBase {
     val rows = takeSamples(df).collect()
     assert(rows.map(_.getAs[String]("class_name")).toSet == classNames.toSet)
     assert(rows.forall(!_.getAs[String]("origin").startsWith("file:")))
+    // the representative is the class's smallest origin, whatever order
+    // the round-robin shuffle returns rows in
+    assert(rows.map(r => r.getAs[String]("class_name") -> r.getAs[String]("origin")).toMap ==
+      classNames.map(n => n -> s"$imgDir/$n/img_0.png").toMap)
   }
 
   test("colourDistribution: fused byte stats on constant images (D4)") {
@@ -61,6 +65,10 @@ class RadiographyJobSpec extends SparkTestBase {
       assert(r.getAs[Float]("standard_deviation") == 0.0f)
       assert(r.getAs[Float]("mean") == r.getAs[Float]("min"))
     }
+    // a bounded sample is the first images by origin: img_0, img_1, img_10
+    val sampled = colourDistribution(df, samplePerClass = 3).collect()
+      .map(r => (r.getAs[Int]("label"), r.getAs[Float]("mean"))).toSeq
+    assert(sampled == classNames.indices.flatMap(k => Seq(0, 1, 10).map(i => (k, (k * 60 + i).toFloat))))
   }
 
   test("mlClassification: RF on byte-stat features (M1/M2/M6/M7)") {
@@ -121,5 +129,22 @@ class RadiographyJobSpec extends SparkTestBase {
       assert(p.length == 4)
       assert(math.abs(p.sum - 1.0f) < 1e-5)
     }
+    // the sample is the first images by origin (COVID sorts first),
+    // scored in that order
+    val dataOf = df.select(col("image.origin"), col("image.data")).collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    val first = Seq(0, 1, 10, 11, 2, 3, 4, 5, 6, 7)
+      .map(i => dataOf(s"file://$imgDir/COVID/img_$i.png")).toArray
+    assert(preds.map(_.getAs[scala.collection.Seq[Float]]("prediction").toSeq).toSeq ==
+      graft.operators.BatchInference.stubModel()(first).map(_.toSeq).toSeq)
+  }
+
+  test("run writes single-file JSON outputs") {
+    checkJobRun("radiography", Map(
+      "percentage_of_samples" -> 4L,
+      "take_samples" -> 4L,
+      "colour_distribution" -> 48L,
+      "ml_classification" -> 1L,
+      "dl_inference" -> 48L))(RadiographyAnalysis.run(spark, imgDir, _))
   }
 }

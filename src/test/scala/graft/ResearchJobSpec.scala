@@ -46,4 +46,9 @@ class ResearchJobSpec extends SparkTestBase {
     assert(p2.getAs[Double]("sentiment_abstract") == -0.5) // 'small'
     assert(p2.getAs[Int]("words") == 4)
   }
+
+  test("run writes single-file JSON outputs") {
+    checkJobRun("research", Map("paper_authors" -> 3L, "paper_abstracts" -> 2L))(
+      ResearchChallengeAnalysis.run(spark, fixture, _))
+  }
 }
